@@ -530,7 +530,7 @@ object Bench {
     * earlier docs (one appended token), so the MinHash pipeline has
     * real positives to find at every size. Generated on executors
     * (spark.range → map), no driver materialization. */
-  private def dedupDocs(spark: SparkSession, n: Long)
+  private[graft] def dedupDocs(spark: SparkSession, n: Long)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._

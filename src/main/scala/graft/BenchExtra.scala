@@ -90,10 +90,10 @@ object BenchExtra {
         val n = args.lift(1).map(_.toLong).getOrElse(960000L)
         val s = session(cpus)
         import org.apache.spark.sql.functions._
-        val docs = dedupDocsLike(s, n)
+        val docs = Bench.dedupDocs(s, n)
         s.sparkContext.setJobDescription("warmup")
         locally {
-          val w = dedupDocsLike(s, n / 8)
+          val w = Bench.dedupDocs(s, n / 8)
           graft.ops.DedupOps.exactDedup(w, "id", "text").count()
           graft.ops.DedupOps.dedupSurvivors(w, "id",
             graft.ops.DedupOps.minhashPairs(w, "id", "text",
@@ -251,28 +251,5 @@ object BenchExtra {
       case other =>
         System.err.println(s"unknown mode: $other")
     }
-  }
-
-  /** Same generator as Bench.dedupDocs (kept in sync manually — Bench
-    * is frozen and its generator is private). */
-  private def dedupDocsLike(spark: SparkSession, n: Long)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val textUdf = udf { (id: Long) =>
-      val base = if (id >= n * 9 / 10) id % math.max(n / 10, 1L) else id
-      val sb = new StringBuilder(1100)
-      var j = 0
-      while (j < 60) {
-        val h = graft.url.Hashing.mix(base * 131L + j, 0x5EED2L)
-        sb.append(java.lang.Long.toHexString(h)).append(' ')
-        j += 1
-      }
-      if (id != base) sb.append("copia")
-      sb.toString
-    }
-    val parts = math.max(
-      spark.sessionState.conf.numShufflePartitions * 2, 4)
-    spark.range(0L, n, 1L, parts)
-      .select(col("id"), textUdf(col("id")).as("text"))
   }
 }

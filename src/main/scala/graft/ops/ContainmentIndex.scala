@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.table.DeltaLog
 
 /** Persisted containment index — INCREMENTAL exact containment
   * dedup ([[DedupOps.containmentPairs]]) for a growing corpus, the
@@ -46,33 +46,56 @@ object ContainmentIndex {
 
   final case class Meta(n: Int, freqCap: Long, pct: Int, minSize: Long,
       docs: Long, deltas: Seq[String], runIds: Seq[String] = Nil,
-      stopsVer: Int = 1) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      stopsVer: Int = 1) extends DeltaLog.Chain[Meta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
+  private val log = new DeltaLog.Chained[Meta]("cont-meta.json",
+      "containment index", "v") {
+    override def readDeltas(spark: SparkSession, dir: String,
+        m: Meta): DataFrame =
+      spark.read.parquet(m.deltas.map(d => gramsPath(dir, d)): _*)
+
+    override protected def deltaPaths(d: String): Seq[String] =
+      Seq(s"grams/$d", s"sizes/$d")
+
+    override protected def extraPaths(m: Meta): Seq[String] =
+      Seq(s"stops-v${m.stopsVer}")
+
+    // postings hold every kept gram occurrence, so df re-derives from
+    // them alone — no text is ever re-shingled here. The frozen stop
+    // set persists ACROSS rewrites: un-stopping a gram would need its
+    // postings back, which only a rebuild from text can provide
+    // (one-way ratchet, same shape as AnnIndex's frozen quantizer).
+    protected def land(rows: DataFrame, dir: String, v: String,
+        m: Meta): Meta = {
+      val pinned = DedupOps.materialize(rows)
+      val newStops = pinned.groupBy(col("g"))
+        .agg(count(lit(1)).as("dfreq"))
+        .filter(col("dfreq") > m.freqCap).select(col("g"))
+      val stops = DedupOps.materialize(
+        readStops(pinned.sparkSession, dir, m).unionByName(newStops)
+          .distinct())
+      val kept = DedupOps.materialize(
+        pinned.join(stops, Seq("g"), "left_anti"))
+      val docs = writeDelta(kept, dir, v)
+      // the NEW stops dir lands with the delta, before the meta swap
+      // commits both; the old one goes after it
+      val nextVer = m.stopsVer + 1
+      stops.write.mode(SaveMode.Overwrite)
+        .parquet(stopsPath(dir, nextVer))
+      m.copy(docs = docs, deltas = Seq(v), stopsVer = nextVer)
+    }
+
+    // a single delta still rewrites: compact RE-FREEZES the stop set
+    override def compact(dir: String): Meta = {
+      val m = current(dir)
+      if (m.deltas.isEmpty) m else rewrite(dir, m, identity)
+    }
   }
 
-  private def metaPath(dir: String) = Paths.get(dir, "cont-meta.json")
-
-  def readMeta(dir: String): Option[Meta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[Meta]))
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("cont-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def readMeta(dir: String): Option[Meta] = log.read(dir)
 
   private def gramsOf(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
@@ -86,6 +109,8 @@ object ContainmentIndex {
   // old dir — no crash window ever leaves the index without a
   // readable stop set
   private def stopsPath(dir: String, ver: Int) = s"$dir/stops-v$ver"
+  private def readStops(spark: SparkSession, dir: String, m: Meta) =
+    spark.read.parquet(stopsPath(dir, m.stopsVer))
   private def gramsPath(dir: String, d: String) = s"$dir/grams/$d"
   private def sizesPath(dir: String, d: String) = s"$dir/sizes/$d"
 
@@ -95,11 +120,8 @@ object ContainmentIndex {
     * single-task write). Returns the count of docs WITH postings. */
   private def writeDelta(kept: DataFrame, dir: String,
       v: String): Long = {
-    val spark = kept.sparkSession
-    val parts = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / 4)
-    kept.repartition(parts, col("g")).sortWithinPartitions("g")
-      .write.mode(SaveMode.Overwrite).parquet(gramsPath(dir, v))
+    val parts = DeltaLog.deltaParts(kept.sparkSession)
+    DeltaLog.writeSorted(kept, "g", parts, gramsPath(dir, v))
     kept.groupBy(col("id")).agg(count(lit(1)).as("sz"))
       .repartition(parts, col("id"))
       .write.mode(SaveMode.Overwrite).parquet(sizesPath(dir, v))
@@ -116,13 +138,10 @@ object ContainmentIndex {
       minSize: Long = 4): Meta = {
     require(n >= 1 && freqCap >= 2 && pct >= 1 && pct <= 100 &&
       minSize >= 1)
-    DedupIndex.dropDir(dir)
-    val spark = org.apache.spark.sql.SparkSession.active
-    spark.range(0).select(col("id").as("g"))
-      .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
-    val m = Meta(n, freqCap, pct, minSize, 0L, Nil)
-    writeMeta(dir, m)
-    m
+    log.init(dir, Meta(n, freqCap, pct, minSize, 0L, Nil)) {
+      SparkSession.active.range(0).select(col("id").as("g"))
+        .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
+    }
   }
 
   /** Build the index over an initial corpus: derives document
@@ -134,15 +153,14 @@ object ContainmentIndex {
       minSize: Long = 4): Meta = {
     require(n >= 1 && freqCap >= 2 && pct >= 1 && pct <= 100 &&
       minSize >= 1)
-    DedupIndex.dropDir(dir)
     val grams = DedupOps.materialize(gramsOf(docs, idCol, textCol, n))
-    grams.groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") > freqCap)
-      .select(col("g"))
-      .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
-    val m = Meta(n, freqCap, pct, minSize, 0L, Nil)
-    writeMeta(dir, m)
-    appendGrams(grams, dir, m, runId = "")
+    log.init(dir, Meta(n, freqCap, pct, minSize, 0L, Nil)) {
+      grams.groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
+        .filter(col("dfreq") > freqCap)
+        .select(col("g"))
+        .write.mode(SaveMode.Overwrite).parquet(stopsPath(dir, 1))
+    }
+    log.append(dir, runId = "")((m, v) => landGrams(grams, dir, m, v))
   }
 
   /** Append one batch's postings + sizes as a new delta (batch grams
@@ -150,33 +168,20 @@ object ContainmentIndex {
     * streaming replay guard (same contract as [[DedupIndex.append]]).
     */
   def append(batch: DataFrame, idCol: String, textCol: String,
-      dir: String, runId: String = ""): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir — call build() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    appendGrams(
-      DedupOps.materialize(gramsOf(batch, idCol, textCol, m.n)),
-      dir, m, runId)
-  }
+      dir: String, runId: String = ""): Meta =
+    log.append(dir, runId) { (m, v) =>
+      landGrams(DedupOps.materialize(gramsOf(batch, idCol, textCol, m.n)),
+        dir, m, v)
+    }
 
-  private def appendGrams(grams: DataFrame, dir: String, m: Meta,
-      runId: String): Meta = {
-    val spark = grams.sparkSession
-    val stops = spark.read.parquet(stopsPath(dir, m.stopsVer))
-    val kept = DedupOps.materialize(
-      grams.join(stops, Seq("g"), "left_anti"))
-    val v = f"v${DedupIndex.nextVersion(m.deltas)}%05d"
-    // docs counts documents WITH postings (a doc whose every gram is
-    // stopped contributes none) — the same rule rewrite() uses, so a
-    // no-op compact never changes the count
-    val nDocs = writeDelta(kept, dir, v)
-    val next = m.copy(docs = m.docs + nDocs, deltas = m.deltas :+ v,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
-  }
+  // docs counts documents WITH postings (a doc whose every gram is
+  // stopped contributes none) — the same rule the rewrite uses, so a
+  // no-op compact never changes the count
+  private def landGrams(grams: DataFrame, dir: String, m: Meta,
+      v: String): Long =
+    writeDelta(DedupOps.materialize(grams.join(
+      readStops(grams.sparkSession, dir, m), Seq("g"), "left_anti")),
+      dir, v)
 
   /** Containment pairs a NEW batch introduces: (batch ↔ indexed)
     * cross pairs plus within-batch pairs, under the index's frozen
@@ -201,14 +206,12 @@ object ContainmentIndex {
   def probePairs(batch: DataFrame, idCol: String, textCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L,
       dfGuard: Boolean = false): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir"))
+    val m = log.current(dir)
     val spark = batch.sparkSession
     import spark.implicits._
-    val stops = spark.read.parquet(stopsPath(dir, m.stopsVer))
     val bg = DedupOps.materialize(
       gramsOf(batch, idCol, textCol, m.n)
-        .join(stops, Seq("g"), "left_anti"))
+        .join(readStops(spark, dir, m), Seq("g"), "left_anti"))
     val bSizes = DedupOps.materialize(
       bg.groupBy($"id").agg(count(lit(1)).as("sz"))
         .filter($"sz" >= m.minSize))
@@ -224,8 +227,7 @@ object ContainmentIndex {
         val withC =
           if (m.deltas.isEmpty) bDf.withColumn("cc", lit(0L))
           else bDf.join(
-            spark.read
-              .parquet(m.deltas.map(d => gramsPath(dir, d)): _*)
+            log.readDeltas(spark, dir, m)
               .join(bDf.select($"g"), Seq("g"))
               .groupBy($"g").agg(count(lit(1)).as("cc")),
             Seq("g"), "left")
@@ -258,8 +260,7 @@ object ContainmentIndex {
     val cross =
       if (m.deltas.isEmpty) within.limit(0)
       else {
-        val postings = spark.read
-          .parquet(m.deltas.map(d => gramsPath(dir, d)): _*)
+        val postings = log.readDeltas(spark, dir, m)
           .select($"g", $"id".as("cid"))
         val cSizes = spark.read
           .parquet(m.deltas.map(d => sizesPath(dir, d)): _*)
@@ -293,54 +294,11 @@ object ContainmentIndex {
     * the unfrozen batch op over the current corpus unless a
     * [[deleteIds]] pulled a stopped gram back under the cap. runIds
     * survive; O(index bytes). */
-  def compact(dir: String): Meta = rewrite(dir, identity)
+  def compact(dir: String): Meta = log.compact(dir)
 
   /** Remove documents by id (revised-corpus workflow — stale
     * postings would emit phantom pairs on every probe). Re-freezes
     * like [[compact]]; O(index bytes). */
-  def deleteIds(ids: DataFrame, dir: String): Meta = {
-    val del = ids.toDF("del_id")
-    rewrite(dir, _.join(del, col("id") === col("del_id"), "left_anti"))
-  }
-
-  private def rewrite(dir: String, f: DataFrame => DataFrame): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no containment index at $dir"))
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (m.deltas.isEmpty) return m
-    // postings hold every kept gram occurrence, so df re-derives from
-    // them alone — no text is ever re-shingled here. Old stop grams
-    // are already absent; they stay stopped only if re-counted over
-    // the surviving rows... they cannot be re-counted (their rows were
-    // never stored), so the frozen stop set persists ACROSS compacts
-    // by design: un-stopping a gram would need its postings back,
-    // which only a rebuild from text can provide (documented
-    // one-way ratchet, same shape as AnnIndex's frozen quantizer).
-    val rows = DedupOps.materialize(f(spark.read
-      .parquet(m.deltas.map(d => gramsPath(dir, d)): _*)))
-    val newStops = rows.groupBy(col("g"))
-      .agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") > m.freqCap).select(col("g"))
-    val oldStops = spark.read.parquet(stopsPath(dir, m.stopsVer))
-    val stops = DedupOps.materialize(
-      oldStops.unionByName(newStops).distinct())
-    val kept = DedupOps.materialize(
-      rows.join(stops, Seq("g"), "left_anti"))
-    val v = f"v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val docs = writeDelta(kept, dir, v)
-    // write the NEW stops dir first, commit both via the atomic meta
-    // swap, THEN drop the old artifacts — a crash anywhere leaves the
-    // meta pointing at a complete, readable index state
-    val nextVer = m.stopsVer + 1
-    stops.write.mode(SaveMode.Overwrite)
-      .parquet(stopsPath(dir, nextVer))
-    val next = m.copy(docs = docs, deltas = Seq(v), stopsVer = nextVer)
-    writeMeta(dir, next)
-    DedupIndex.dropDir(stopsPath(dir, m.stopsVer))
-    m.deltas.foreach { d =>
-      DedupIndex.dropDir(gramsPath(dir, d))
-      DedupIndex.dropDir(sizesPath(dir, d))
-    }
-    next
-  }
+  def deleteIds(ids: DataFrame, dir: String): Meta =
+    log.deleteIds(ids, dir)
 }

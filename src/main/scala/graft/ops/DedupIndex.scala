@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.table.DeltaLog
 
 /** Persisted MinHash-LSH signature index — INCREMENTAL near-duplicate
   * detection for a growing corpus.
@@ -53,58 +53,26 @@ object DedupIndex {
   /** Index geometry + lineage. `kind`: "char" (k-shingles) or "word"
     * (k-grams). `deltas`: append-only list of signature dirs, oldest
     * first. `docs`: total indexed documents (advisory, for sizing).
-    * `runIds`: ids of appended batches — the replay-idempotence guard
-    * for streaming micro-batches (a replayed foreachBatch must not
-    * re-append its signatures, which would self-pair every future
-    * probe). Null-safe on read: metas written before the field existed
-    * deserialize with null. */
+    * `runIds`: the replay guard ([[graft.table.DeltaLog.Chain]]). */
   final case class IndexMeta(kind: String, k: Int, numHashes: Int,
       bands: Int, docs: Long, deltas: Seq[String],
-      runIds: Seq[String] = Nil) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      runIds: Seq[String] = Nil) extends DeltaLog.Chain[IndexMeta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
-
-  private def metaPath(dir: String) = Paths.get(dir, "index-meta.json")
-
-  def readMeta(dir: String): Option[IndexMeta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[IndexMeta]))
-
-  private def writeMeta(dir: String, m: IndexMeta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("index-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def dropDir(dir: String): Unit = {
-    def rec(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val ls = Files.list(p)
-        try ls.forEach(rec) finally ls.close()
-      }
-      Files.deleteIfExists(p)
+  private val log = new DeltaLog.Chained[IndexMeta]("index-meta.json",
+      "index", "sig/v") {
+    protected def land(rows: DataFrame, dir: String, delta: String,
+        m: IndexMeta): IndexMeta = {
+      writeSigs(rows, s"$dir/$delta", 0L, m)
+      // docs count survives compaction; deletes recount from the rows
+      m.withChain(rows.sparkSession.read.parquet(s"$dir/$delta")
+        .select("id").distinct().count(), Seq(delta), m.runIds)
     }
-    if (Files.exists(Paths.get(dir))) rec(Paths.get(dir))
   }
 
-  /** Next delta version: max over LIVE dirs + 1, never deltas.size+1 —
-    * after a compaction ([v00005] with size 1) size-based naming would
-    * eventually Overwrite the live dir. */
-  private[graft] def nextVersion(deltas: Seq[String]): Int =
-    deltas.map(d => d.substring(d.lastIndexOf('v') + 1).toInt)
-      .foldLeft(0)(math.max) + 1
+  def readMeta(dir: String): Option[IndexMeta] = log.read(dir)
 
   private def shinglerOf(m: IndexMeta): String => Array[Long] =
     m.kind match {
@@ -137,6 +105,16 @@ object DedupIndex {
       explode(bandsUdf(col(textCol))).as("bandHash"))
   }
 
+  /** One signature delta: repartitioned + SORTED by bandHash so parquet
+    * row-group min/max stats stay tight (the shuffle-join fallback's
+    * runtime bloom filter prunes row groups against them); ~4M
+    * signature rows per file for large batches. */
+  private def writeSigs(rows: DataFrame, path: String, docs: Long,
+      m: IndexMeta): Unit =
+    DeltaLog.writeSorted(rows, "bandHash",
+      DeltaLog.deltaParts(rows.sparkSession, docs.toDouble * m.bands / 4e6),
+      path)
+
   /** Initialize an EMPTY index (geometry only, no deltas) — the
     * streaming entry point: the first micro-batch probes an empty
     * index (within-batch pairs only) and appends itself. Drops any
@@ -144,10 +122,7 @@ object DedupIndex {
   def init(dir: String, kind: String = "char", k: Int = 5,
       numHashes: Int = 64, bands: Int = 16): IndexMeta = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    dropDir(dir)
-    val m = IndexMeta(kind, k, numHashes, bands, 0L, Nil)
-    writeMeta(dir, m)
-    m
+    log.init(dir, IndexMeta(kind, k, numHashes, bands, 0L, Nil))()
   }
 
   /** Initialize the index over a corpus (drops any existing index at
@@ -160,113 +135,28 @@ object DedupIndex {
   }
 
   /** Append one batch's signatures as a new delta dir. O(batch) CPU —
-    * settled documents are never re-shingled. Files are written
-    * repartitioned + SORTED by bandHash so parquet row-group min/max
-    * stats stay tight (the shuffle-join fallback's runtime bloom
-    * filter prunes row groups against them).
-    *
-    * A non-empty `runId` makes the append IDEMPOTENT: a runId already
-    * recorded returns the current meta without writing (the streaming
-    * replay guard — foreachBatch is at-least-once, and a re-appended
-    * batch would self-pair on every future probe). The meta swap is
-    * atomic and happens AFTER the delta lands, so a crash between
-    * write and swap leaves an orphan delta dir that is simply
-    * rewritten on replay (Overwrite mode), never double-referenced. */
+    * settled documents are never re-shingled. A non-empty `runId`
+    * makes the append IDEMPOTENT ([[graft.table.DeltaLog.Chained]]). */
   def append(docs: DataFrame, idCol: String, textCol: String,
-      dir: String, runId: String = ""): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir — call write() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    val spark = docs.sparkSession
-    val delta = f"sig/v${nextVersion(m.deltas)}%05d"
-    val n = docs.count()
-    // partition count scales with batch size (~4M sig rows each, a
-    // few tens of MB of parquet) and never below the session's
-    // parallelism floor for small batches
-    val parts = math.max(
-      math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-      math.ceil(n.toDouble * m.bands / 4e6).toInt)
-    banded(docs, idCol, textCol, m)
-      .repartition(parts, col("bandHash"))
-      .sortWithinPartitions("bandHash")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val next = m.copy(docs = m.docs + n, deltas = m.deltas :+ delta,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
-  }
+      dir: String, runId: String = ""): IndexMeta =
+    log.append(dir, runId) { (m, delta) =>
+      val n = docs.count()
+      writeSigs(banded(docs, idCol, textCol, m), s"$dir/$delta", n, m)
+      n
+    }
 
-  /** Read the full signature index (union of delta dirs). */
-  def readIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
-    if (m.deltas.isEmpty)
-      spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Nil))
-    else spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*)
-  }
-
-  /** Compact the delta chain into ONE signature dir (a long-lived
-    * stream appends one delta per micro-batch; without compaction
-    * [[readIndex]] plans O(batches) scans). runIds survive — replay
-    * idempotence is unaffected. Old delta dirs are deleted after the
-    * atomic meta swap (the index is derived data: no time travel). */
-  def compact(dir: String): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
-    if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
-  }
+  /** Compact the delta chain into ONE signature dir; runIds survive.
+    * Old delta dirs are deleted after the atomic meta swap (the index
+    * is derived data: no time travel). */
+  def compact(dir: String): IndexMeta = log.compact(dir)
 
   /** Remove documents from the index (the revised-corpus workflow:
     * [[graft.table.TableIO.invalidatePeriods]] re-opens a period, and
-    * its documents must stop pairing — a stale signature row would
-    * emit phantom pairs against deleted docs on every future probe).
-    * Rewrites the signature rows anti-joined on id — O(index bytes),
-    * which is ~0.3% of the corpus (16 B × bands per doc), not a
-    * corpus rewrite. Compacts as a side effect. */
-  def deleteIds(ids: DataFrame, dir: String): IndexMeta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
-    if (m.deltas.isEmpty) m
-    else {
-      val del = ids.toDF("del_id")
-      rewrite(dir, m,
-        _.join(del, col("id") === col("del_id"), "left_anti"))
-    }
-  }
-
-  /** Shared rewrite: read all deltas, transform, land ONE new delta,
-    * swap meta, reap superseded dirs. */
-  private def rewrite(dir: String, m: IndexMeta,
-      f: DataFrame => DataFrame): IndexMeta = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val rows = f(readIndex(spark, dir))
-    // an emptied index must reference NO delta (a schema-less empty
-    // parquet dir would poison the next read)
-    if (rows.isEmpty) {
-      val next = m.copy(docs = 0L, deltas = Nil)
-      writeMeta(dir, next)
-      m.deltas.foreach(d => dropDir(s"$dir/$d"))
-      return next
-    }
-    val delta = f"sig/v${nextVersion(m.deltas)}%05d"
-    val parts = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / 4)
-    rows.repartition(parts, col("bandHash"))
-      .sortWithinPartitions("bandHash")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    // docs count survives compaction; deletes recount from the rows
-    val docs = spark.read.parquet(s"$dir/$delta")
-      .select("id").distinct().count()
-    val next = m.copy(docs = docs, deltas = Seq(delta))
-    writeMeta(dir, next)
-    m.deltas.foreach(d => dropDir(s"$dir/$d"))
-    next
-  }
+    * its documents must stop pairing). Rewrites the signature rows
+    * anti-joined on id — O(index bytes), ~0.3% of the corpus (16 B ×
+    * bands per doc), not a corpus rewrite. */
+  def deleteIds(ids: DataFrame, dir: String): IndexMeta =
+    log.deleteIds(ids, dir)
 
   /** Near-dup pairs a NEW batch introduces: (batch ↔ indexed corpus)
     * cross pairs plus within-batch pairs, exact-verified at
@@ -288,8 +178,7 @@ object DedupIndex {
       idCol: String, textCol: String, dir: String,
       threshold: Double = 0.6,
       maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = log.current(dir)
     val cand = DedupOps.materialize(
       probeCandidates(newDocs, idCol, textCol, dir, maxBroadcastRows))
     val texts = corpusTexts
@@ -307,8 +196,7 @@ object DedupIndex {
     * exchange. */
   def probeCandidates(newDocs: DataFrame, idCol: String, textCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no index at $dir"))
+    val m = log.current(dir)
     val spark = newDocs.sparkSession
     import spark.implicits._
     val newBanded = DedupOps.materialize(
@@ -323,7 +211,7 @@ object DedupIndex {
     val cross =
       if (m.deltas.isEmpty) within.limit(0)
       else {
-        val index = readIndex(spark, dir)
+        val index = log.readDeltas(spark, dir, m)
         val joined =
           if (batchSigRows <= maxBroadcastRows)
             index.join(broadcast(nb), Seq("bandHash"))

@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.table.DeltaLog
 
 /** Persisted 64-bit-sketch index — INCREMENTAL Hamming near-dup
   * detection for a growing corpus, the [[DedupIndex]] analog for the
@@ -38,33 +38,22 @@ import org.apache.spark.sql.functions._
 object SketchIndex {
 
   final case class Meta(maxDist: Int, docs: Long, deltas: Seq[String],
-      runIds: Seq[String] = Nil) {
-    def committedRunIds: Set[String] =
-      if (runIds == null) Set.empty else runIds.toSet
+      runIds: Seq[String] = Nil) extends DeltaLog.Chain[Meta] {
+    def withChain(docs: Long, deltas: Seq[String], runIds: Seq[String]) =
+      copy(docs = docs, deltas = deltas, runIds = runIds)
   }
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
+  private val log = new DeltaLog.Chained[Meta]("sketch-meta.json",
+      "sketch index", "chunk/v") {
+    protected def land(rows: DataFrame, dir: String, delta: String,
+        m: Meta): Meta = {
+      writeChunks(rows, s"$dir/$delta", 0L, m)
+      m.withChain(rows.sparkSession.read.parquet(s"$dir/$delta")
+        .select("id").distinct().count(), Seq(delta), m.runIds)
+    }
   }
 
-  private def metaPath(dir: String) = Paths.get(dir, "sketch-meta.json")
-
-  def readMeta(dir: String): Option[Meta] =
-    if (!Files.exists(metaPath(dir))) None
-    else Some(mapper.readValue(Files.readString(metaPath(dir)),
-      classOf[Meta]))
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = metaPath(dir).resolveSibling("sketch-meta.json.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(m))
-    Files.move(tmp, metaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def readMeta(dir: String): Option[Meta] = log.read(dir)
 
   /** Initialize an empty index for sketches verified at `maxDist`
     * (drops any existing index — chunk geometry derives from it and
@@ -74,10 +63,7 @@ object SketchIndex {
     // degenerates under JVM shift-mod-64 — exact sketch equality is a
     // plain groupBy, not an index problem
     require(maxDist >= 1 && maxDist < 64, "maxDist must be in [1, 64)")
-    DedupIndex.dropDir(dir)
-    val m = Meta(maxDist, 0L, Nil)
-    writeMeta(dir, m)
-    m
+    log.init(dir, Meta(maxDist, 0L, Nil))()
   }
 
   /** The `maxDist+1` pigeonhole chunk keys of a sketch column, as
@@ -95,85 +81,40 @@ object SketchIndex {
     }
   }
 
+  /** One chunk delta, repartitioned + sorted by chunkKey for tight
+    * row-group stats; ~8M chunk rows per file for large batches. */
+  private def writeChunks(rows: DataFrame, path: String, docs: Long,
+      m: Meta): Unit =
+    DeltaLog.writeSorted(rows, "chunkKey", DeltaLog.deltaParts(
+      rows.sparkSession, docs.toDouble * (m.maxDist + 1) / 8e6), path)
+
   /** Append one batch's chunk rows as a new delta dir. `sketches`
     * must carry (idCol, simCol BIGINT); compute sketches map-side
     * from payloads exactly once (e.g.
-    * [[MultimodalOps.imageIndexAppend]] fuses the decode in). Written
-    * repartitioned + sorted by chunkKey for tight row-group stats.
+    * [[MultimodalOps.imageIndexAppend]] fuses the decode in).
     * Non-empty `runId` = idempotent streaming replay guard. */
   def append(sketches: DataFrame, idCol: String, simCol: String,
-      dir: String, runId: String = ""): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir — call init() first"))
-    if (runId.nonEmpty && m.committedRunIds.contains(runId)) return m
-    val spark = sketches.sparkSession
-    val delta = f"chunk/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val rows = sketches.select(col(idCol).as("id"),
-      col(simCol).cast("long").as("sim"))
-    val n = rows.count()
-    val parts = math.max(
-      math.max(1, spark.sessionState.conf.numShufflePartitions / 4),
-      math.ceil(n.toDouble * (m.maxDist + 1) / 8e6).toInt)
-    rows
-      .select(col("id"), col("sim"),
-        explode(array(chunkKeys(col("sim"), m.maxDist): _*))
-          .as("chunkKey"))
-      .repartition(parts, col("chunkKey"))
-      .sortWithinPartitions("chunkKey")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val next = m.copy(docs = m.docs + n, deltas = m.deltas :+ delta,
-      runIds =
-        if (runId.isEmpty) m.runIds
-        else (if (m.runIds == null) Nil else m.runIds) :+ runId)
-    writeMeta(dir, next)
-    next
-  }
+      dir: String, runId: String = ""): Meta =
+    log.append(dir, runId) { (m, delta) =>
+      val rows = sketches.select(col(idCol).as("id"),
+        col(simCol).cast("long").as("sim"))
+      val n = rows.count()
+      writeChunks(rows.select(col("id"), col("sim"),
+          explode(array(chunkKeys(col("sim"), m.maxDist): _*))
+            .as("chunkKey")),
+        s"$dir/$delta", n, m)
+      n
+    }
 
   /** Compact the delta chain into ONE chunk dir; runIds survive.
     * Same contract as [[DedupIndex.compact]]. */
-  def compact(dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
-    if (m.deltas.size <= 1) m else rewrite(dir, m, identity)
-  }
+  def compact(dir: String): Meta = log.compact(dir)
 
   /** Remove sketches by id (revised-corpus workflow — a stale chunk
     * row would emit phantom pairs against deleted images on every
     * probe). O(index bytes) rewrite; compacts as a side effect. */
-  def deleteIds(ids: DataFrame, dir: String): Meta = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
-    if (m.deltas.isEmpty) m
-    else {
-      val del = ids.toDF("del_id")
-      rewrite(dir, m,
-        _.join(del, col("id") === col("del_id"), "left_anti"))
-    }
-  }
-
-  private def rewrite(dir: String, m: Meta,
-      f: DataFrame => DataFrame): Meta = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val rows = f(spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*))
-    if (rows.isEmpty) {
-      val next = m.copy(docs = 0L, deltas = Nil)
-      writeMeta(dir, next)
-      m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-      return next
-    }
-    val delta = f"chunk/v${DedupIndex.nextVersion(m.deltas)}%05d"
-    val parts = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / 4)
-    rows.repartition(parts, col("chunkKey"))
-      .sortWithinPartitions("chunkKey")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$delta")
-    val docs = spark.read.parquet(s"$dir/$delta")
-      .select("id").distinct().count()
-    val next = m.copy(docs = docs, deltas = Seq(delta))
-    writeMeta(dir, next)
-    m.deltas.foreach(d => DedupIndex.dropDir(s"$dir/$d"))
-    next
-  }
+  def deleteIds(ids: DataFrame, dir: String): Meta =
+    log.deleteIds(ids, dir)
 
   /** Hamming near-dup pairs a NEW batch of sketches introduces:
     * (batch ↔ indexed) cross pairs plus within-batch pairs, verified
@@ -182,8 +123,7 @@ object SketchIndex {
     * pairs touching ≥1 batch id. Probe first, then [[append]]. */
   def probePairs(batch: DataFrame, idCol: String, simCol: String,
       dir: String, maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val m = readMeta(dir).getOrElse(throw new IllegalStateException(
-      s"no sketch index at $dir"))
+    val m = log.current(dir)
     val spark = batch.sparkSession
     import spark.implicits._
     val sketches = DedupOps.materialize(batch.select(
@@ -196,7 +136,7 @@ object SketchIndex {
         val nb = sketches.select($"id".as("n_id"), $"sim".as("n_sim"),
             explode(array(chunkKeys($"sim", m.maxDist): _*))
               .as("chunkKey"))
-        val index = spark.read.parquet(m.deltas.map(d => s"$dir/$d"): _*)
+        val index = log.readDeltas(spark, dir, m)
         val joined =
           if (batchRows * (m.maxDist + 1) <= maxBroadcastRows)
             index.join(broadcast(nb), Seq("chunkKey"))

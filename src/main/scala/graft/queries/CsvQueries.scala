@@ -29,11 +29,7 @@ object CsvQueries {
     // overwrite each other's staged CSVs
     val outPath = fixtureBase.resolve(math.abs(dir.hashCode).toString)
     val out = outPath.toString
-    if (Files.exists(outPath)) {
-      val listing = Files.list(outPath)
-      try listing.forEach(p => Files.delete(p))
-      finally listing.close()
-    }
+    graft.table.DeltaLog.delete(outPath)
     Files.createDirectories(outPath)
     val nations = s.read.parquet(s"$dir/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")

@@ -235,15 +235,9 @@ object StreamingCrawl {
     }
   }
 
-  private def writeDocsLog(docsDir: String, dirs: Seq[String]): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(docsDir))
-    val tmp = docsLogPath(docsDir).resolveSibling("docs-log.txt.tmp")
-    java.nio.file.Files.writeString(tmp, dirs.mkString("\n"))
-    java.nio.file.Files.move(tmp, docsLogPath(docsDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeDocsLog(docsDir: String, dirs: Seq[String]): Unit =
+    graft.table.DeltaLog.atomicWrite(docsLogPath(docsDir),
+      dirs.mkString("\n"))
 
   /** Streaming NEAR-DUP curation over a document stream, backed by
     * the persisted signature index ([[graft.ops.DedupIndex]] — call
@@ -323,13 +317,13 @@ object StreamingCrawl {
             graft.ops.DedupIndex.compact(indexDir)
           val live = readDocsLog(docsDir)
           if (live.size >= compactEvery) {
-            val merged = f"merged-v${graft.ops.DedupIndex
+            val merged = f"merged-v${graft.table.DeltaLog
               .nextVersion(live.filter(_.startsWith("merged-")))}%05d"
             spark.read.parquet(live.map(d => s"$docsDir/$d"): _*)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(s"$docsDir/$merged")
             writeDocsLog(docsDir, Seq(merged))
-            live.foreach(d => graft.ops.DedupIndex.dropDir(s"$docsDir/$d"))
+            live.foreach(d => graft.table.DeltaLog.delete(s"$docsDir/$d"))
           }
         }
       }

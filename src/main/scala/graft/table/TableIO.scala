@@ -1,10 +1,8 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,13 +58,6 @@ object TableIO {
       totalRows: Long, lineage: Lineage, runIds: Seq[String] = Nil,
       cumulative: Boolean = false)
 
-  private val mapper = {
-    val m = new ObjectMapper()
-    m.registerModule(DefaultScalaModule)
-    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
-
   private def hintPath(dir: String): Path = Paths.get(dir, "version-hint.txt")
 
   def currentVersion(dir: String): Option[Int] = {
@@ -80,23 +71,25 @@ object TableIO {
     // expired-chain fallbacks (cumulativePartitionMeta, recordRunId's
     // heal path) catch IOException — an IAE here would turn their
     // documented degrade-to-scan behavior into a crash
-    if (!Files.exists(p))
+    DeltaLog.readJson(p, classOf[Snapshot]).getOrElse(
       throw new java.nio.file.NoSuchFileException(p.toString, null,
         s"snapshot v$version does not exist (never committed, or " +
-          "expired by TableIO.expire)")
-    mapper.readValue(Files.readString(p), classOf[Snapshot])
+          "expired by TableIO.expire)"))
   }
 
   def currentSnapshot(dir: String): Option[Snapshot] =
     currentVersion(dir).map(readSnapshot(dir, _))
 
-  /** Atomic write: tmp file in the same directory, then ATOMIC_MOVE. */
-  private def atomicWrite(target: Path, content: String): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** Publish `snap`: write snapshot vN, atomically swap the version
+    * hint to it, then record its runId in the sidecar. */
+  private def publish(dir: String, snap: Snapshot,
+      parent: Option[Snapshot]): Snapshot = {
+    DeltaLog.writeJson(
+      Paths.get(dir, "snapshots", f"v${snap.version}%05d.json"), snap,
+      pretty = true)
+    DeltaLog.atomicWrite(hintPath(dir), snap.version.toString)
+    recordRunId(dir, parent, snap.lineage.runId)
+    snap
   }
 
   // ---- cumulative runId sidecar ------------------------------------
@@ -105,9 +98,7 @@ object TableIO {
     Paths.get(dir, "snapshots", "runids.json")
 
   private def readRunIdsSidecar(dir: String): Option[Seq[String]] =
-    if (!Files.exists(runIdsPath(dir))) None
-    else Some(mapper.readValue(Files.readString(runIdsPath(dir)),
-      classOf[Array[String]]).toSeq)
+    DeltaLog.readJson(runIdsPath(dir), classOf[Array[String]]).map(_.toSeq)
 
   /** Append `runId` to the cumulative sidecar (called AFTER the hint
     * swap, so the sidecar never lists an uncommitted run). Crashes in
@@ -139,8 +130,7 @@ object TableIO {
         prior :+ p.lineage.runId
       case _ => prior
     }
-    atomicWrite(runIdsPath(dir),
-      mapper.writeValueAsString(healed :+ runId))
+    DeltaLog.writeJson(runIdsPath(dir), healed :+ runId)
   }
 
   /** Cumulative run ids of `snap` WITHOUT the sidecar: its embedded
@@ -295,11 +285,7 @@ object TableIO {
       parts,
       parent.map(_.totalRows).getOrElse(0L) + parts.map(_.rows).sum,
       Lineage(runId, parent.map(_.version).getOrElse(0), periods, note))
-    atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-    atomicWrite(hintPath(dir), version.toString)
-    recordRunId(dir, parent, runId)
-    snap
+    publish(dir, snap, parent)
   }
 
   /** Compact the snapshot chain: rewrite every committed data/seen
@@ -349,10 +335,7 @@ object TableIO {
           s"$note: ${parent.dataDirs.size} data dirs, " +
             s"${parent.seenDirs.size} seen dirs -> 1 each"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
+      publish(dir, snap, Some(parent))
       // the compacted seen dir holds the same key SET (distinct of the
       // union), so a cuckoo sketch covering the parent's dirs stays
       // valid — only its coverage list must follow the rewrite; a
@@ -363,7 +346,7 @@ object TableIO {
           if (m.covered.toSet == parent.seenDirs.toSet)
             graft.seen.CuckooSeen.writeMeta(sk,
               m.copy(covered = if (hasSeen) Seq(seenDirName) else Nil))
-          else graft.seen.CuckooSeen.dropDir(sk)
+          else DeltaLog.delete(sk)
         }
       }
       snap
@@ -451,11 +434,7 @@ object TableIO {
             s"(metadata-only: ${droppedLeaves.size} partition refs " +
             "dropped, 0 data files rewritten)"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
-      snap
+      publish(dir, snap, Some(parent))
     }
 
   /** Roll the table back to snapshot `toVersion` (Iceberg's
@@ -522,9 +501,9 @@ object TableIO {
                 .select($"urlHash").as[Long].distinct()
               val kept = m.covered.filter(target.seenDirs.toSet)
               try C.deleteFromDir(dropped, sk, m, kept)
-              catch { case _: Exception => C.dropDir(sk) }
+              catch { case _: Exception => DeltaLog.delete(sk) }
             }
-          } else C.dropDir(sk)
+          } else DeltaLog.delete(sk)
         }
       }
 
@@ -551,11 +530,7 @@ object TableIO {
             s"${parent.dataDirs.size - target.dataDirs.size} data dir " +
             "refs dropped)"),
         cumulative = true)
-      atomicWrite(Paths.get(dir, "snapshots", f"v$version%05d.json"),
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))
-      atomicWrite(hintPath(dir), version.toString)
-      recordRunId(dir, Some(parent), runId)
-      snap
+      publish(dir, snap, Some(parent))
     }
 
   /** Keep the persisted cuckoo URL-seen sketch (CrawlJob
@@ -576,17 +551,9 @@ object TableIO {
         // distinct: a URL may appear in several dropped image rows,
         // but its hash was inserted into the sketch exactly once
         try C.deleteFromDir(dropped.distinct(), sketchDir, m, newCovered)
-        catch { case _: Exception => C.dropDir(sketchDir) }
-      } else C.dropDir(sketchDir)
+        catch { case _: Exception => DeltaLog.delete(sketchDir) }
+      } else DeltaLog.delete(sketchDir)
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = Files.list(p)
-      try children.forEach(deleteRec) finally children.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   /** Expire everything the CURRENT snapshot does not reference: data/
@@ -604,8 +571,7 @@ object TableIO {
       // make sure the sidecar index exists BEFORE deleting the chain
       // it would otherwise be derived from
       if (readRunIdsSidecar(dir).isEmpty)
-        atomicWrite(runIdsPath(dir),
-          mapper.writeValueAsString(chainRunIds(dir, cur)))
+        DeltaLog.writeJson(runIdsPath(dir), chainRunIds(dir, cur))
       // rel is kept outright when an entry covers it (equals it or is
       // an ancestor of it); partially kept when some entry lives
       // below it (recurse); otherwise deleted
@@ -616,7 +582,7 @@ object TableIO {
             val children = try ls.iterator().asScala.toVector
               finally ls.close()
             children.foreach(c => sweep(c, s"$rel/${c.getFileName}"))
-          } else deleteRec(p)
+          } else DeltaLog.delete(p)
         }
       for (root <- Seq("data", "seen")) {
         val rp = Paths.get(dir, root)
@@ -628,7 +594,7 @@ object TableIO {
         }
       }
       for (v <- 1 until cur.version)
-        Files.deleteIfExists(Paths.get(dir, "snapshots", f"v$v%05d.json"))
+        DeltaLog.delete(Paths.get(dir, "snapshots", f"v$v%05d.json"))
     }
 
   /** Read a set of dataDirs entries (whole commit dirs or partition

@@ -132,8 +132,8 @@ class ResumableCrawlSpec extends AnyFunSuite {
     assert(log2.filter(_.month == 3).nonEmpty)
     assert(log2.filter(_.month == 3).forall(_.status != CrawlStatus.Skipped))
 
-    // marker file: any REBUILD goes through dropDir and would delete
-    // it — its survival proves the following runs maintained the
+    // marker file: any REBUILD deletes the sketch dir and with it the
+    // marker — its survival proves the following runs maintained the
     // sketch incrementally (delta inserts / in-place eviction)
     val marker = java.nio.file.Paths.get(s"$dir/_cuckoo", "marker.keep")
     java.nio.file.Files.writeString(marker, "incremental-witness")
@@ -208,7 +208,7 @@ class ResumableCrawlSpec extends AnyFunSuite {
     assert(CuckooSeen.readMeta(s"$dir/_cuckoo").get.covered
       === snap2.seenDirs)
 
-    // marker: any rebuild goes through dropDir and would delete it
+    // marker: any rebuild deletes the sketch dir and with it the marker
     val marker = java.nio.file.Paths.get(s"$dir/_cuckoo", "marker.keep")
     java.nio.file.Files.writeString(marker, "incremental-witness")
 
